@@ -756,17 +756,21 @@ def _effective_diameter_sql(
         "e AS (SELECT src, dst FROM eb UNION SELECT dst, src FROM eb)",
         f"verts AS ({_VERTS_SMALL_SQL})",
         f"m0 AS (SELECT id, {init_cols} FROM verts)",
+        # each vertex ORs its own registers with its out-neighbours': a
+        # self row plus the out-edges, so each round reads the previous
+        # round ONCE (DuckDB inlines CTEs; two references per round would
+        # replay the whole chain 2^radius times)
+        (
+            "nb AS (SELECT id, id AS nb FROM verts UNION ALL "
+            "SELECT src, dst FROM e WHERE src IN (SELECT id FROM verts))"
+        ),
     ]
     for t in range(1, radius + 1):
         prev = f"m{t - 1}"
-        agg = ", ".join(f"bit_or(n.r{i}) AS r{i}" for i in range(k))
-        mrg = ", ".join(
-            f"m.r{i} | COALESCE(a.r{i}, 0) AS r{i}" for i in range(k)
-        )
+        agg = ", ".join(f"bit_or(p.r{i}) AS r{i}" for i in range(k))
         ctes.append(
-            f"m{t} AS (SELECT m.id, {mrg} FROM {prev} m LEFT JOIN "
-            f"(SELECT e.src AS id, {agg} FROM e JOIN {prev} n "
-            "ON n.id = e.dst GROUP BY e.src) a USING (id))"
+            f"m{t} AS (SELECT s.id, {agg} FROM nb s JOIN {prev} p "
+            "ON p.id = s.nb GROUP BY s.id)"
         )
     sums = " UNION ALL ".join(
         f"SELECT {t} AS t, sum({est}) AS s FROM m{t}"

@@ -49,7 +49,6 @@ def _build_session(args: argparse.Namespace) -> SparkSession:
         b = b.config("spark.driver.memory", args.memory)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    gf_config.apply_session_prefs(spark)
     return spark
 
 

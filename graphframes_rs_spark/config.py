@@ -1,10 +1,16 @@
 """Engine configuration via ``spark.graphframes.*`` session conf keys.
 
 Mirrors the reference's ``GraphFramesConfig`` registered engine options
-(reference: src/utils/options.rs:5-21 — ``graphframes.prefer_smj``,
-``graphframes.checkpoint_dir``) as Spark session configuration, the
-idiomatic place for engine knobs. All keys are read lazily at algorithm
-run time, so ``spark.conf.set(...)`` takes effect per run.
+(reference: src/utils/options.rs:5-21 — ``graphframes.checkpoint_dir``)
+as Spark session configuration, the idiomatic place for engine knobs. All
+keys are read lazily at algorithm run time, so ``spark.conf.set(...)``
+takes effect per run.
+
+Checkpoints are always hash-bucketed sorted tables (the reference's
+``push_pre_sorted`` contract, §4 of SURVEY.md). The reference's
+sort-merge-join pin has no key here: Spark's AQE picks the join strategy,
+and callers who want to force sort-merge joins set Spark's own join keys
+on their session.
 """
 
 from __future__ import annotations
@@ -17,16 +23,6 @@ from pyspark.sql import SparkSession
 # the builder did not set one (reference: graphframes.checkpoint_dir).
 CHECKPOINT_DIR = "spark.graphframes.checkpointDir"
 
-# Use hash-bucketed sorted checkpoint tables so per-superstep joins elide
-# their Exchange (the reference's push_pre_sorted contract, §4 of SURVEY.md).
-BUCKETED_CHECKPOINTS = "spark.graphframes.bucketedCheckpoints"
-
-# The reference pins sort-merge join for out-of-core friendliness
-# (graphframes.prefer_smj, default true). On Spark the analogue is leaving
-# broadcast available but letting callers force SMJ behaviour by disabling
-# the broadcast threshold; kept as a documented knob.
-PREFER_SMJ = "spark.graphframes.preferSortMergeJoin"
-
 
 def _get(spark: SparkSession, key: str, default: Optional[str]) -> Optional[str]:
     try:
@@ -35,16 +31,8 @@ def _get(spark: SparkSession, key: str, default: Optional[str]) -> Optional[str]
         return default
 
 
-def use_bucketed_checkpoints(spark: SparkSession) -> bool:
-    return str(_get(spark, BUCKETED_CHECKPOINTS, "true")).lower() == "true"
-
-
 def default_checkpoint_dir(spark: SparkSession) -> Optional[str]:
     return _get(spark, CHECKPOINT_DIR, None)
-
-
-def prefer_smj(spark: SparkSession) -> bool:
-    return str(_get(spark, PREFER_SMJ, "false")).lower() == "true"
 
 
 # Parquet-checkpoint cadence for Pregel supersteps (classic GraphFrames
@@ -59,19 +47,19 @@ PREGEL_CHECKPOINT_INTERVAL = "spark.graphframes.pregel.checkpointInterval"
 
 
 def pregel_checkpoint_interval(spark: SparkSession) -> int:
+    """The session's checkpoint interval; raises ``ValueError`` (naming the
+    key) for a non-integer or ``< 1`` value, the same contract as
+    ``PregelBuilder.with_checkpoint_interval``."""
+    raw = _get(spark, PREGEL_CHECKPOINT_INTERVAL, "2")
     try:
-        return max(1, int(_get(spark, PREGEL_CHECKPOINT_INTERVAL, "2")))
+        k = int(raw)
     except (TypeError, ValueError):
-        return 2
-
-
-def apply_session_prefs(spark: SparkSession) -> None:
-    """Apply the join-strategy preference the way the reference's
-    ``scoped_ctx`` does (options.rs:16-21): when ``preferSortMergeJoin`` is
-    set, disable auto-broadcast so every join streams (out-of-core mode)."""
-    if prefer_smj(spark):
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
+        k = 0
+    if k < 1:
+        raise ValueError(
+            f"{PREGEL_CHECKPOINT_INTERVAL} must be an integer >= 1, got {raw!r}"
+        )
+    return k
 
 
 # Gated fast path for closed-triangle motif patterns in find(): enumerate

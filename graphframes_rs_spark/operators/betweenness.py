@@ -124,7 +124,6 @@ class BetweennessBuilder:
         # with_materialized_edges contract (see k_core/pagerank prep):
         # otherwise each of the 2·T supersteps would re-run the caller's
         # edge lineage and re-exchange it.
-        from graphframes_rs_spark import config as gf_config
         from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 
         import time
@@ -140,10 +139,7 @@ class BetweennessBuilder:
         raw = self.graph.edges.select(SRC, DST).observe(
             pobs, F.count(F.lit(1)).alias("n")
         )
-        if gf_config.use_bucketed_checkpoints(spark):
-            edges = prep_ckpt.push_bucketed(raw, SRC, shuffle_n, "edges")
-        else:
-            edges = prep_ckpt.push_partitioned(raw, SRC, shuffle_n, "edges")
+        edges = prep_ckpt.push_bucketed(raw, SRC, shuffle_n, "edges")
         try:
             n_prep = int(pobs.get["n"] or 0)
         except Exception:
@@ -249,10 +245,7 @@ class BetweennessBuilder:
         # identical; plan-wise the phase is layer-scale, not graph-scale.
         t0 = time.monotonic()
         rev = edges.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-        if gf_config.use_bucketed_checkpoints(spark):
-            redges = prep_ckpt.push_bucketed(rev, SRC, shuffle_n, "redges")
-        else:
-            redges = prep_ckpt.push_partitioned(rev, SRC, shuffle_n, "redges")
+        redges = prep_ckpt.push_bucketed(rev, SRC, shuffle_n, "redges")
         self.phase_stats_.append(
             ("prep_rev", n_prep, round(time.monotonic() - t0, 2))
         )

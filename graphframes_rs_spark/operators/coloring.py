@@ -63,7 +63,6 @@ class ColoringBuilder:
         converges (the default — voting stops the loop at completion);
         a ``max_iterations`` safety cap that fires first leaves the
         not-yet-scheduled vertices NULL."""
-        from graphframes_rs_spark import config as gf_config
         from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 
         spark = self.graph.vertices.sparkSession
@@ -79,10 +78,7 @@ class ColoringBuilder:
         sym = symmetrize_edges(
             self.graph.edges.select("src", "dst"), deduplicate=True
         )
-        if gf_config.use_bucketed_checkpoints(spark):
-            sym = prep_ckpt.push_bucketed(sym, "src", shuffle_n, "edges")
-        else:
-            sym = prep_ckpt.push_partitioned(sym, "src", shuffle_n, "edges")
+        sym = prep_ckpt.push_bucketed(sym, "src", shuffle_n, "edges")
         # largest-degree-first priority (JP-LDF): pure hash priorities
         # build long monotone chains THROUGH hubs (measured 101 rounds on
         # a 171k-vertex bipartite hub graph); ranking by (degree, hash)

@@ -66,7 +66,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from graphframes_rs_spark import config as gf_config
 from graphframes_rs_spark.graphframe import DST, GraphFrame, ID, SRC, symmetrize_edges
 from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 
@@ -233,7 +232,6 @@ class ConnectedComponentsBuilder:
         component. Component ids are minimum original member ids when
         ``use_labels_as_components`` (default), else representative ids."""
         spark = self.graph.vertices.sparkSession
-        gf_config.apply_session_prefs(spark)
         ckpt = ParquetCheckpointer(spark, self._checkpoint_dir)
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 

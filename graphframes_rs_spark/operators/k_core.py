@@ -313,12 +313,10 @@ class KCoreBuilder:
         """
         from pyspark.sql import Observation
 
-        from graphframes_rs_spark import config as gf_config
         from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 
         spark = self.graph.vertices.sparkSession
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        bucketed = gf_config.use_bucketed_checkpoints(spark)
         base = self._checkpoint_dir
         pinned = ParquetCheckpointer(
             spark, None if base is None else base + "/pinned"
@@ -326,15 +324,6 @@ class KCoreBuilder:
         rotating = ParquetCheckpointer(
             spark, (base or pinned.directory) + "/rotating"
         )
-
-        def _push(pool, df, key, name, assume_partitioned=False):
-            if bucketed:
-                return pool.push_bucketed(
-                    df, key, shuffle_n, name, assume_partitioned=assume_partitioned
-                )
-            return pool.push_partitioned(
-                df, key, shuffle_n, name, assume_partitioned=assume_partitioned
-            )
 
         # prep: symmetrize with the dedup folded into the bucket layout —
         # repartition(dst) satisfies the (src, dst) distinct's clustering,
@@ -344,7 +333,9 @@ class KCoreBuilder:
             .repartition(shuffle_n, DST)
             .dropDuplicates([SRC, DST])
         )
-        edges = _push(pinned, sym, DST, "edges", assume_partitioned=True)
+        edges = pinned.push_bucketed(
+            sym, DST, shuffle_n, "edges", assume_partitioned=True
+        )
         # 0 when the edge frame was empty (push materializes nothing) —
         # the final evict must then skip, not eat the result checkpoint
         n_edge_ckpts = pinned.num_checkpoints
@@ -398,10 +389,10 @@ class KCoreBuilder:
             new_est = new_est.observe(
                 obs, F.sum(F.col("__kc_chg").cast("long")).alias("n")
             )
-            est = _push(
-                rotating,
+            est = rotating.push_bucketed(
                 new_est.select(ID, KCORE),
                 ID,
+                shuffle_n,
                 f"est{rnd}",
                 assume_partitioned=True,
             )
@@ -426,7 +417,6 @@ class KCoreBuilder:
     def _run_pregel(self) -> DataFrame:
         """The Pregel-client form (kept as the incremental/count-compressed
         host and as an equivalence baseline; see _run_specialized)."""
-        from graphframes_rs_spark import config as gf_config
         from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 
         spark = self.graph.vertices.sparkSession
@@ -434,16 +424,13 @@ class KCoreBuilder:
         # Materialize the prepared (symmetrized, deduped) edge set ONCE and
         # derive both the seed degrees and the Pregel iteration from the same
         # scan — otherwise the symmetrize+distinct pipeline runs twice (once
-        # per consumer), a full extra pass over the edge set at scale. With
-        # bucketed checkpoints the degrees groupBy(src) is also exchange-free.
+        # per consumer), a full extra pass over the edge set at scale. The
+        # bucketed checkpoint makes the degrees groupBy(src) exchange-free.
         prep_ckpt = ParquetCheckpointer(
             spark, None if self._checkpoint_dir is None else self._checkpoint_dir + "/prep"
         )
         raw = symmetrize_edges(self.graph.edges.select(SRC, DST), deduplicate=True)
-        if gf_config.use_bucketed_checkpoints(spark):
-            prepared_edges = prep_ckpt.push_bucketed(raw, SRC, shuffle_n, "edges")
-        else:
-            prepared_edges = prep_ckpt.push_partitioned(raw, SRC, shuffle_n, "edges")
+        prepared_edges = prep_ckpt.push_bucketed(raw, SRC, shuffle_n, "edges")
         degrees = prepared_edges.groupBy(F.col(SRC).alias(ID)).agg(
             F.count(F.lit(1)).alias("degree")
         )

@@ -46,7 +46,6 @@ import time
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from graphframes_rs_spark import config as gf_config
 from graphframes_rs_spark.graphframe import DST, GraphFrame, ID, SRC
 from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 
@@ -192,7 +191,6 @@ class LouvainBuilder:
         """Returns DataFrame[id, community]; community = minimum original
         member id (isolated vertices are their own community)."""
         spark = self.graph.vertices.sparkSession
-        gf_config.apply_session_prefs(spark)
         ckpt = ParquetCheckpointer(spark, self._checkpoint_dir)
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
         lvl_ckpt = ParquetCheckpointer(spark, ckpt.directory + "/levels")

@@ -54,9 +54,6 @@ class MISBuilder:
 
     def run(self) -> DataFrame:
         spark = self.graph.vertices.sparkSession
-        from graphframes_rs_spark import config as gf_config
-
-        gf_config.apply_session_prefs(spark)
         ckpt = ParquetCheckpointer(spark, self._checkpoint_dir)
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 

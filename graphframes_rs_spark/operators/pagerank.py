@@ -106,7 +106,6 @@ class PageRankBuilder:
 
     def run(self) -> DataFrame:
         """Returns DataFrame[id, pagerank] normalized to sum 1."""
-        from graphframes_rs_spark import config as gf_config
         from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 
         alpha = 1.0 - self.reset_prob
@@ -114,8 +113,8 @@ class PageRankBuilder:
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
         # Materialize the edge projection once; the out-degree seed and the
-        # Pregel iteration both read the same checkpointed scan (with
-        # bucketed checkpoints the degree groupBy(src) is exchange-free).
+        # Pregel iteration both read the same checkpointed scan (bucketed,
+        # so the degree groupBy(src) is exchange-free).
         prep_ckpt = ParquetCheckpointer(
             spark,
             None if self._checkpoint_dir is None else self._checkpoint_dir + "/prep",
@@ -138,10 +137,7 @@ class PageRankBuilder:
                 ]
             )
         )
-        if gf_config.use_bucketed_checkpoints(spark):
-            edges = prep_ckpt.push_bucketed(raw, SRC, shuffle_n, "edges")
-        else:
-            edges = prep_ckpt.push_partitioned(raw, SRC, shuffle_n, "edges")
+        edges = prep_ckpt.push_bucketed(raw, SRC, shuffle_n, "edges")
 
         # PageRank needs out-degrees to split the delta over out-edges
         # (the sum of outgoing weights in weighted mode). Vertices with no

@@ -307,24 +307,39 @@ def pack_documents(
     )
 
 
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated ONCE per row: Spark does
+    not share subexpressions into higher-order-function lambdas, so an
+    array expression referenced inside a lambda is re-evaluated for every
+    element. Binding it as a lambda variable (a one-element ``transform``)
+    evaluates it once and hands the lambda a plain reference."""
+    return F.transform(F.array(value), body)[0]
+
+
 def _bigram_count_exprs(col: Column):
     """(total_bigrams, top_count, once_count) column triple over the token
     bigrams of ``col`` — the shared per-row core of the repetition filters
-    (everything stays inside one row; no explode, no shuffle)."""
-    toks_ = tokens(col)
-    n = F.size(toks_)
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks_, i), F.element_at(toks_, i + 1)
+    (everything stays inside one row; no explode, no shuffle). The token
+    and bigram arrays are bound with :func:`_let`, so counting costs
+    O(d·b) comparisons, not a re-split per bigram and per distinct one."""
+    bigrams = _let(
+        tokens(col),
+        lambda toks_: F.when(
+            F.size(toks_) >= 2,
+            F.transform(
+                F.sequence(F.lit(1), F.size(toks_) - 1),
+                lambda i: F.concat_ws(
+                    " ", F.element_at(toks_, i), F.element_at(toks_, i + 1)
+                ),
             ),
+        ).otherwise(F.array().cast("array<string>")),
+    )
+    counts = _let(
+        bigrams,
+        lambda bg: F.transform(
+            F.array_distinct(bg),
+            lambda d: F.size(F.filter(bg, lambda x: x == d)),
         ),
-    ).otherwise(F.array().cast("array<string>"))
-    counts = F.transform(
-        F.array_distinct(bigrams),
-        lambda d: F.size(F.filter(bigrams, lambda x: x == d)),
     )
     total_bg = F.size(bigrams)
     top = F.coalesce(F.array_max(counts), F.lit(0))

@@ -305,9 +305,11 @@ class PregelBuilder:
         max_iter = self._max_iterations if self._max_iterations is not None else 2**31
 
         spark = self.graph.vertices.sparkSession
-        # out-of-core mode: honour spark.graphframes.preferSortMergeJoin the
-        # way the reference's scoped_ctx honours graphframes.prefer_smj
-        gf_config.apply_session_prefs(spark)
+        ckpt_interval = (
+            self._checkpoint_interval
+            if self._checkpoint_interval is not None
+            else gf_config.pregel_checkpoint_interval(spark)
+        )
         # Two checkpoint pools: `pinned` holds the edges offload (must stay
         # live for the whole run) and the final state; `rotating` holds the
         # per-superstep states, evicted as the loop advances.
@@ -318,31 +320,16 @@ class PregelBuilder:
         rotating = ParquetCheckpointer(spark, base + "/rotating")
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-        # Bucketed checkpoints (spark.graphframes.bucketedCheckpoints,
-        # default on): state and edges come back declaring
+        # Bucketed checkpoints: state and edges come back declaring
         # HashPartitioning(key, N), so the per-superstep state⋈edges SMJ
         # runs with no Exchange on either side — the reference's
         # shuffle-free sorted-merge iteration (SURVEY.md §4) in native
-        # Spark bucket metadata.
-        if gf_config.use_bucketed_checkpoints(spark):
-            # One sorted file per bucket is guaranteed by push_bucketed, so
-            # the scan may declare its sort order too — the superstep SMJ
-            # then elides its per-side Sort as well as the Exchange. Spark
-            # only applies sorted metadata when a bucket has exactly one
-            # file, so this is safe to leave set session-wide.
-            spark.conf.set(
-                "spark.sql.legacy.bucketedTableScan.outputOrdering", "true"
-            )
-
-            def _push(pool, df, key, name, assume_partitioned=False):
-                return pool.push_bucketed(
-                    df, key, shuffle_n, name, assume_partitioned=assume_partitioned
-                )
-        else:
-            def _push(pool, df, key, name, assume_partitioned=False):
-                return pool.push_partitioned(
-                    df, key, shuffle_n, name, assume_partitioned=assume_partitioned
-                )
+        # Spark bucket metadata. One sorted file per bucket is guaranteed
+        # by push_bucketed, so the scan may declare its sort order too —
+        # the superstep SMJ then elides its per-side Sort as well as the
+        # Exchange. Spark only applies sorted metadata when a bucket has
+        # exactly one file, so this is safe to leave set session-wide.
+        spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
 
         # -- init state (pregel.rs:266-270, 326-348) ------------------------
         state = self.graph.vertices
@@ -354,7 +341,7 @@ class PregelBuilder:
         if self._voting is not None:
             v_name, _ = self._voting
             state = state.withColumn(v_name, F.lit(True))
-        state = _push(rotating, state, ID, "state")
+        state = rotating.push_bucketed(state, ID, shuffle_n, "state")
 
         # -- offload edges once, partitioned by src (pregel.rs:351-368) -----
         if self._edges_materialized:
@@ -378,15 +365,12 @@ class PregelBuilder:
             edge_proj = [F.col(SRC), F.col(DST)] + [
                 F.col(c).alias(_EDGE_PREFIX + c) for c in self._edge_columns
             ]
-            edges = _push(pinned, self.graph.edges.select(*edge_proj), SRC, "edges")
+            edges = pinned.push_bucketed(
+                self.graph.edges.select(*edge_proj), SRC, shuffle_n, "edges"
+            )
         n_edge_ckpts = pinned.num_checkpoints  # 0 if edges pre-materialized/empty
 
         needs_dst = not self._skip_dest_state
-        ckpt_interval = (
-            self._checkpoint_interval
-            if self._checkpoint_interval is not None
-            else gf_config.pregel_checkpoint_interval(spark)
-        )
         cached_states: list = []
         # (superstep_number, Observation, persisted_state) per not-yet-read
         # voting metric; persisted_state is None for the write superstep.
@@ -551,7 +535,9 @@ class PregelBuilder:
             # the state scan / inserted message exchange, so the checkpoint
             # write skips its own repartition — one full state-sized exchange
             # elided from EVERY superstep.
-            state = _push(rotating, new_state, ID, "state", assume_partitioned=True)
+            state = rotating.push_bucketed(
+                new_state, ID, shuffle_n, "state", assume_partitioned=True
+            )
             if obs is not None:
                 pending_votes.append((iteration + 1, obs, None))
             iteration += 1
@@ -573,8 +559,8 @@ class PregelBuilder:
                         # (writes from the memory cache — no recompute; the
                         # returned scan reads parquet, not the cache) and
                         # discard the overshoot write.
-                        state = _push(
-                            rotating, cached, ID, "state", assume_partitioned=True
+                        state = rotating.push_bucketed(
+                            cached, ID, shuffle_n, "state", assume_partitioned=True
                         )
                         iteration = step_no
                     break
@@ -601,9 +587,5 @@ class PregelBuilder:
         # the edges offload) can be reclaimed while the result stays live.
         final = pinned.push(result, "final")
         pinned.evict(n_edge_ckpts)  # edges offload no longer needed
-        if rotating.num_checkpoints == 0:
-            # Nothing was ever materialized (empty graph) — the result is
-            # still a pure logical plan; purge is safe either way.
-            pass
         rotating.purge()
         return final

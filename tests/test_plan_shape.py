@@ -105,37 +105,6 @@ def test_pregel_superstep_join_is_shuffle_free(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_plain_checkpoint_fallback_same_results(spark, tmp_path):
-    """spark.graphframes.bucketedCheckpoints=false must give identical
-    algorithm results through the plain parquet checkpoint path."""
-    from graphframes_rs_spark import GraphFrame
-
-    v = spark.createDataFrame([(i,) for i in range(12)], "id long")
-    e = spark.createDataFrame(
-        [(i, (i + 1) % 12) for i in range(12)] + [(0, 6)], "src long, dst long"
-    )
-    g = GraphFrame(v, e)
-
-    def results():
-        pr = (
-            g.page_rank().max_iterations(4).with_tol(0.0)
-            .set_checkpoint_dir(str(tmp_path / "pr")).run()
-        )
-        kc = g.k_core().set_checkpoint_dir(str(tmp_path / "kc")).run()
-        return (
-            {r["id"]: round(r["pagerank"], 9) for r in pr.collect()},
-            {r["id"]: r["kcore"] for r in kc.collect()},
-        )
-
-    bucketed = results()
-    spark.conf.set("spark.graphframes.bucketedCheckpoints", "false")
-    try:
-        plain = results()
-    finally:
-        spark.conf.unset("spark.graphframes.bucketedCheckpoints")
-    assert bucketed == plain
-
-
 def test_token_topk_plans_take_ordered(spark):
     """token_topk's top-k must plan as TakeOrderedAndProject (distributed
     per-partition top-k + k*p merge), NEVER a ranking window over the full

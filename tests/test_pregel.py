@@ -189,6 +189,22 @@ def test_validation_errors(spark):
         g.pregel().add_message(F.lit(1), MessageDirection.SRC_TO_DST).add_aggregate_expr(
             F.sum(Pregel.msg())
         ).run()
+    runnable = (
+        g.pregel()
+        .add_message(F.lit(1), MessageDirection.SRC_TO_DST)
+        .add_aggregate_expr(F.sum(Pregel.msg()))
+        .max_iterations(1)
+    )
+    with pytest.raises(ValueError, match=">= 1"):
+        runnable.with_checkpoint_interval(0)
+    key = "spark.graphframes.pregel.checkpointInterval"
+    for bad in ("0", "-3", "abc"):
+        spark.conf.set(key, bad)
+        try:
+            with pytest.raises(ValueError, match=key):
+                runnable.run()
+        finally:
+            spark.conf.unset(key)
 
 
 def test_materialized_edges_rejects_edge_columns(spark):

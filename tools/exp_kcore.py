@@ -61,22 +61,13 @@ def main():
             spark.catalog.clearCache()
             jvm = spark.sparkContext._jvm
             jvm.System.gc(); time.sleep(1.0); jvm.System.gc()
-            spark.conf.set("spark.graphframes.bucketedCheckpoints", "true")
             spark.conf.unset("spark.graphframes.pregel.checkpointInterval")
             kc = g.k_core().max_iterations(5).set_checkpoint_dir(tempfile.mkdtemp())
             if mode == "cc":
                 kc = kc.with_count_compression(True)
             elif mode == "inc":
                 kc = kc.with_incremental_messages(True)
-            elif mode == "nobucket":
-                spark.conf.set("spark.graphframes.bucketedCheckpoints", "false")
-            elif mode == "nobucket_cc":
-                spark.conf.set("spark.graphframes.bucketedCheckpoints", "false")
-                kc = kc.with_count_compression(True)
             elif mode == "interval5":
-                spark.conf.set("spark.graphframes.pregel.checkpointInterval", "5")
-            elif mode == "nobucket_interval5":
-                spark.conf.set("spark.graphframes.bucketedCheckpoints", "false")
                 spark.conf.set("spark.graphframes.pregel.checkpointInterval", "5")
             t0 = time.monotonic()
             n = kc.run().count()

@@ -19,7 +19,6 @@ import time
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
-from graphframes_rs_spark import config as gf_config
 from graphframes_rs_spark.graphframe import DST, ID, SRC, symmetrize_edges
 from graphframes_rs_spark.operators.connected_components import (
     COMPONENT,
@@ -35,9 +34,9 @@ from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 
 
 def old_wcc_run(self):
-    """r14-HEAD ConnectedComponentsBuilder.run(), verbatim."""
+    """r14-HEAD ConnectedComponentsBuilder.run(), verbatim except for the
+    dropped join-preference hook (a no-op at default settings)."""
     spark = self.graph.vertices.sparkSession
-    gf_config.apply_session_prefs(spark)
     ckpt = ParquetCheckpointer(spark, self._checkpoint_dir)
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
