@@ -46,20 +46,25 @@ def default_checkpoint_dir(spark: SparkSession) -> Optional[str]:
 PREGEL_CHECKPOINT_INTERVAL = "spark.graphframes.pregel.checkpointInterval"
 
 
-def pregel_checkpoint_interval(spark: SparkSession) -> int:
-    """The session's checkpoint interval; raises ``ValueError`` (naming the
-    key) for a non-integer or ``< 1`` value, the same contract as
-    ``PregelBuilder.with_checkpoint_interval``."""
-    raw = _get(spark, PREGEL_CHECKPOINT_INTERVAL, "2")
+def int_conf(spark: SparkSession, key: str, default: int, minimum: int) -> int:
+    """The session's integer value of ``key`` (``default`` when unset);
+    raises ``ValueError`` naming the key for a non-integer value or one
+    below ``minimum``. Callers read their keys before their first Spark
+    job, so a bad value fails fast and leaves nothing behind."""
+    raw = _get(spark, key, str(default))
     try:
         k = int(raw)
     except (TypeError, ValueError):
-        k = 0
-    if k < 1:
-        raise ValueError(
-            f"{PREGEL_CHECKPOINT_INTERVAL} must be an integer >= 1, got {raw!r}"
-        )
+        k = None
+    if k is None or k < minimum:
+        raise ValueError(f"{key} must be an integer >= {minimum}, got {raw!r}")
     return k
+
+
+def pregel_checkpoint_interval(spark: SparkSession) -> int:
+    """The session's checkpoint interval (>= 1), the same contract as
+    ``PregelBuilder.with_checkpoint_interval``."""
+    return int_conf(spark, PREGEL_CHECKPOINT_INTERVAL, 2, 1)
 
 
 # Gated fast path for closed-triangle motif patterns in find(): enumerate

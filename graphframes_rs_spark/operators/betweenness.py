@@ -201,8 +201,7 @@ class BetweennessBuilder:
             # forward phase drops 15.5s -> 9.7s and is then
             # checkpoint-write-bound (2M-row state x 4 supersteps), not
             # join-bound; with the reversed-edge backward prune the query
-            # fell 44.6s -> 27.0s (phase trail in BENCH_DETAIL
-            # betweenness_stats)
+            # fell 44.6s -> 27.0s
             .with_participation_column(
                 "__bw_front",
                 F.col(ID).isin(self.sources),

@@ -33,16 +33,15 @@ edge frame and rep maps as bucketed checkpoints removes ~3 of the ~5
 edge-scale Exchanges per round (the reps aggregate and relabel join 1
 consume declared HashPartitioning) and measured +11% on the uniform
 54M-edge tier — but **35% SLOWER on the power-law skew18m tier** (46.3s
-vs 34.3s warm interleaved, warmups agree; tools/exp_r15_wcc_bucketed.py
-at commit 45f32fc): AQE's skew-join splitting only applies when BOTH
-join sides are ENSURE_REQUIREMENTS shuffles, so a bucket-aligned relabel
-join cannot split the contracted giant-component supernode's partition,
-and after round 1 the surviving edges concentrate exactly there. No
-hybrid keeps both properties (any bucketed side of the join disables the
-split; an explicit repartition is REPARTITION_BY_NUM, which the skew
-rule also refuses to split). Power-law degree is the 100 TB norm, so
-skew-safety wins over exchange count here — this closes the r6 question
-(tools/exp_wcc.py, ~6% on uniform 18m) with the decisive skew
+vs 34.3s warm interleaved, warmups agree): AQE's skew-join splitting
+only applies when BOTH join sides are ENSURE_REQUIREMENTS shuffles, so a
+bucket-aligned relabel join cannot split the contracted giant-component
+supernode's partition, and after round 1 the surviving edges concentrate
+exactly there. No hybrid keeps both properties (any bucketed side of the
+join disables the split; an explicit repartition is REPARTITION_BY_NUM,
+which the skew rule also refuses to split). Power-law degree is the 100
+TB norm, so skew-safety wins over exchange count here — this closes the
+r6 question (~6% on uniform 18m) with the decisive skew
 counter-evidence.
 
 **Local-finish tail collapse**: geometric contraction means that after
@@ -66,6 +65,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from graphframes_rs_spark.config import int_conf
 from graphframes_rs_spark.graphframe import DST, GraphFrame, ID, SRC, symmetrize_edges
 from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 
@@ -87,7 +87,7 @@ REP_DOUBLING = "spark.graphframes.wcc.repDoubling"
 # round has chains (v -> min-hash neighbour -> its min-hash neighbour...),
 # so one relabel under the raw map wastes most of the round's contraction
 # potential — doubling contracts up to 2^k hops per edge-scale round.
-# Measured (tools/exp_wcc_doubling.py, local[32]): 18M-edge tier 4 rounds
+# Measured (local[32]): 18M-edge tier 4 rounds
 # instead of ~7, warm 28-40s vs 38-48s (16-25% faster, both orders);
 # 6M tier parity at full JVM steady state, ~15% faster in the bench's
 # fresh-session regime. Correctness is unconditional: each doubled map
@@ -232,6 +232,10 @@ class ConnectedComponentsBuilder:
         component. Component ids are minimum original member ids when
         ``use_labels_as_components`` (default), else representative ids."""
         spark = self.graph.vertices.sparkSession
+        local_cut = int_conf(
+            spark, LOCAL_FINISH_EDGES, DEFAULT_LOCAL_FINISH_EDGES, 0
+        )
+        doublings = int_conf(spark, REP_DOUBLING, DEFAULT_REP_DOUBLING, 0)
         ckpt = ParquetCheckpointer(spark, self._checkpoint_dir)
         shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
@@ -258,12 +262,6 @@ class ConnectedComponentsBuilder:
         # join work Σ|reps_i| ≈ 2|V| instead of rounds·|V| (the same reason
         # the reference back-propagates instead of folding forward,
         # connected_components.rs:107-171).
-        local_cut = int(
-            spark.conf.get(LOCAL_FINISH_EDGES, str(DEFAULT_LOCAL_FINISH_EDGES))
-        )
-        doublings = int(
-            spark.conf.get(REP_DOUBLING, str(DEFAULT_REP_DOUBLING))
-        )
         reps_frames = []
         iteration = 0
         while True:

@@ -171,7 +171,7 @@ class KCoreBuilder:
         shuffles ~100 (value, count) rows instead of 10^6 raw messages;
         below ~10^4 max degree the plain single-shuffle form wins.
 
-        Measured on the bench.py skew18m power-law tier (18M edges / 6M
+        Measured on the skew18m power-law tier (18M edges / 6M
         vertices, hub in-degree 364k, 5 supersteps, local[32]): the two
         modes are within run-to-run noise of each other — alternating
         best-of-3 gave 45.6s default vs 55.6s compressed, with 2-4x
@@ -300,7 +300,7 @@ class KCoreBuilder:
         Measured negative — frontier restriction (round 7): recomputing
         only vertices adjacent to a change sounds like it should skip the
         settled majority, but on the skew18m tier the EDGE-weighted
-        affected fraction (tools/exp_kcore_frontier.py) decays too slowly
+        affected fraction decays too slowly
         for the 7-refinement budget: rounds 2-7 still touch 97/89/76/62/
         48/46% of the 36M symmetrized edge rows, bounding the saving at
         ~20% of round stream volume; the affected set itself is 1.7-5.9M

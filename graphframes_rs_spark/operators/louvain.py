@@ -52,29 +52,12 @@ from graphframes_rs_spark.plans.checkpointer import ParquetCheckpointer
 COMMUNITY = "community"
 _GAIN_EPS = 1e-12
 
-# Move rounds >= this index (within each level) aggregate the neighbour
-# messages map-side BEFORE the v-exchange (groupBy(v, uc) + a
-# candidate-scale repartition onto v); earlier rounds repartition the raw
-# messages on v in one edge-scale exchange. MEASURED AND DISABLED (r15,
-# guide §2.3): the r14 verdict hypothesized that once communities
-# coalesce the skipped combine starts to matter — the multiplicity probe
-# (tools/exp_r15_louvain_adaptive.py, 6m bench tier, 2 levels x 3 moves)
-# measured messages/distinct-(v,uc) of 1.000/1.023/1.027 (level 0 rounds
-# 0-2) and 1.000/1.006/1.013 (level 1): the combine would remove <= 2.7%
-# of rows while the combined form's second candidate-scale exchange
-# nearly DOUBLES shuffled rows per round (11.7M agg + 11.7M re-place vs
-# 12.0M raw). Communities do not coalesce enough inside a bounded move
-# budget on weak-structure graphs; the raw single-exchange form shuffles
-# strictly fewer bytes, so it stays on for ALL rounds. The branch remains
-# for the probe/A/B tools (walls measured at parity: adaptive 66.9-67.5s
-# vs raw 69.8s under comparable contention, identical 6,124,345 moves).
-COMBINE_FROM_ROUND = 10**9
-
-# experiment instrumentation (tools/exp_r15_louvain_adaptive.py): when
-# True, each move round also counts its raw message rows and distinct
-# (v, uc) pairs into _MULTIPLICITY_PROBE — extra jobs, never on by default
-PROBE_MULTIPLICITY = False
-_MULTIPLICITY_PROBE = []
+# Move rounds never combine neighbour messages map-side on (v, uc) before
+# the v-exchange. Measured on a 6M-edge power-law graph (2 levels x 3
+# moves), messages per distinct (v, uc) were at most 1.027, so the combine
+# would remove <= 2.7% of rows, while its second candidate-scale exchange
+# nearly doubles shuffled rows per round (11.7M aggregated + 11.7M
+# re-placed vs 12.0M raw). The raw single-exchange form is the only one.
 
 
 def _canonical_weighted_edges(edges: DataFrame, weight_col: str | None) -> DataFrame:
@@ -168,13 +151,13 @@ class LouvainBuilder:
         scale. Composes with ``max_moves`` (whichever stops first); the
         stop is recorded in ``phase_stats_`` as ``move_tol_stop``.
 
-        Measured on the 6m bench tier (tools/exp_louvain_move_tol.py):
-        at frac=0.02 the stop fires at level-0 round 7 (wants 21,030 <=
-        0.02·2M) and returns the remaining budget; the bench row keeps
-        its exact 3-round budget because all three of its rounds are bulk
-        (smallest still wants 574k moves) — the tolerance pays on longer
-        budgets (the default max_moves=10), where level-0 rounds 8+ chase
-        <1% of vertices at full-exchange cost. Level 1 decays much slower
+        Measured on a 6M-edge power-law graph: at frac=0.02 the stop
+        fires at level-0 round 7 (wants 21,030 <= 0.02·2M) and returns
+        the remaining budget; a 3-round budget gains nothing because all
+        three of its rounds are bulk (smallest still wants 574k moves) —
+        the tolerance pays on longer budgets (the default max_moves=10),
+        where level-0 rounds 8+ chase <1% of vertices at full-exchange
+        cost. Level 1 decays much slower
         (~0.85x/round vs level 0's ~0.55x) — fraction-of-|V_level| keys
         the stop to each level's own size, so a slow level simply runs
         its budget."""
@@ -381,28 +364,13 @@ class LouvainBuilder:
             ),
             "u",
         ).select("v", "uc", "w", "tot_c")
-        if PROBE_MULTIPLICITY:
-            _MULTIPLICITY_PROBE.append(
-                (rnd, msg.count(), msg.select("v", "uc").distinct().count())
-            )
-        if rnd >= COMBINE_FROM_ROUND:
-            # coalesced rounds: map-side-combined (v, uc) pairs through the
-            # aggregation exchange, then a candidate-scale re-place onto v
-            # for the enrich/apply joins — two SMALL exchanges
-            nbrc = (
-                msg.groupBy("v", "uc")
-                .agg(F.sum("w").alias("kvc"), F.max("tot_c").alias("tot_c"))
-                .repartition(shuffle_n, "v")
-            )
-        else:
-            # singleton-community rounds: multiplicity ~1, the combine buys
-            # nothing — ONE edge-scale exchange keyed on v satisfies the
-            # aggregation (subset-of-keys clustering) and everything below
-            nbrc = (
-                msg.repartition(shuffle_n, "v")
-                .groupBy("v", "uc")
-                .agg(F.sum("w").alias("kvc"), F.max("tot_c").alias("tot_c"))
-            )
+        # ONE edge-scale exchange keyed on v satisfies the (v, uc)
+        # aggregation (subset-of-keys clustering) and everything below
+        nbrc = (
+            msg.repartition(shuffle_n, "v")
+            .groupBy("v", "uc")
+            .agg(F.sum("w").alias("kvc"), F.max("tot_c").alias("tot_c"))
+        )
         enriched = nbrc.join(
             ntot.select("v", "comm", "k", F.col("tot").alias("tot_own")), "v"
         )

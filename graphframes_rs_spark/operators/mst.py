@@ -52,6 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from graphframes_rs_spark.config import int_conf
 from graphframes_rs_spark.graphframe import DST, GraphFrame, SRC
 
 # Below this many surviving components the hook forest is resolved by ONE
@@ -215,6 +216,12 @@ class MSTBuilder:
                 "unweighted spanning forest)"
             )
         spark = self.graph.vertices.sparkSession
+        local_edge_cut = int_conf(
+            spark, LOCAL_FINISH_EDGES, DEFAULT_LOCAL_FINISH_EDGES, 0
+        )
+        local_cap = int_conf(
+            spark, LOCAL_FINISH_COMPONENTS, DEFAULT_LOCAL_FINISH_COMPONENTS, 0
+        )
         ckpt = ParquetCheckpointer(spark, self._checkpoint_dir)
         w = self.weight_col
 
@@ -260,9 +267,6 @@ class MSTBuilder:
         n_edges = obs0.get["n"]
         picked_plans = []
 
-        local_edge_cut = int(
-            spark.conf.get(LOCAL_FINISH_EDGES, str(DEFAULT_LOCAL_FINISH_EDGES))
-        )
         for rnd in range(1, self.max_iter + 1):
             if n_edges == 0:
                 break
@@ -320,11 +324,6 @@ class MSTBuilder:
                 .alias("parent"),
             )
 
-            local_cap = int(
-                spark.conf.get(
-                    LOCAL_FINISH_COMPONENTS, str(DEFAULT_LOCAL_FINISH_COMPONENTS)
-                )
-            )
             if n_comps <= local_cap:
                 # Tail collapse: resolve the whole hook forest in one task.
                 parent = ckpt.push(_local_roots(parent), f"mst_roots_{rnd}")

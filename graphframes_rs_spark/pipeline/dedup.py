@@ -1021,8 +1021,7 @@ def simhash_against_index(
 # method="auto" crossover (rows): below this the exact blocked-BLAS sweep
 # is both exact AND cheap enough that approximation buys nothing; above it
 # the quadratic total FLOPs start to dominate and the IVF path wins on
-# wall while staying recall-gated. Pinned by a measured sweep on the bench
-# box (tools/exp_neardup_auto.py — see its recorded trajectory: blocked
+# wall while staying recall-gated. Pinned by a measured sweep (blocked
 # wins at 5k/10k/25k, IVF from 50k up, and the gap is a cliff by 200k,
 # 158.7s vs 6.5s), not a guess; the asymptotic argument (O(n²·d) vs
 # O(n^1.5·d)) guarantees the ordering holds past the largest measured
@@ -1080,7 +1079,7 @@ def embedding_near_duplicates(
       set (O(n^2/B) work per task, B = replication dial — see
       similarity.blocked_cosine_candidates). Total FLOPs are quadratic in
       corpus size: the measured win up to ~25k vectors (the IVF fit floor
-      dominates there — tools/exp_neardup_auto.py), a cliff past ~100k.
+      dominates there), a cliff past ~100k.
     * ``"ivf"`` — IVF-cell-bounded candidates (see
       similarity.ivf_cosine_candidates): gram matrices only within a
       vector's home/probed KMeans cells, total FLOPs ~ nprobe·n²/nlist.

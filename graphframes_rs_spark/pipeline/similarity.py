@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graphframes_rs_spark.config import int_conf
+
 
 def _instrument_persist(df, phase, phase_stats, pins):
     """Persist + count an intermediate so its wall is separable in a
@@ -1450,6 +1452,10 @@ def knn_graph(
     )
 
 
+# Bound (rows x dims) on the base cosine_topk_blas may collect to the driver.
+MAX_BLAS_BASE_CELLS = "spark.graphframes.ann.maxBlasBaseCells"
+
+
 def cosine_topk_blas(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -1473,6 +1479,9 @@ def cosine_topk_blas(
     base collect is guarded by ``spark.graphframes.ann.maxBlasBaseCells``
     (rows x dim, default 64M cells = 512 MB of doubles) and raises
     pointing at the scale duals rather than silently OOMing the driver."""
+    max_cells = int_conf(
+        embeddings.sparkSession, MAX_BLAS_BASE_CELLS, 64 * 1024 * 1024, 0
+    )
     # ONE pre-flight job for both guard inputs (not first()+count(), which
     # would execute an uncached upstream plan twice before the collect);
     # max() ignores NULL vectors, so a leading NULL can't break the guard
@@ -1482,16 +1491,11 @@ def cosine_topk_blas(
     ).first()
     n_base = sizes["n"] or 0
     dim = sizes["d"] or 0
-    max_cells = int(
-        embeddings.sparkSession.conf.get(
-            "spark.graphframes.ann.maxBlasBaseCells", str(64 * 1024 * 1024)
-        )
-    )
     if n_base * max(dim, 1) > max_cells:
         raise ValueError(
             f"cosine_topk_blas collects the BASE to the driver: "
             f"{n_base} rows x {dim} dims = {n_base * dim} cells exceeds "
-            f"spark.graphframes.ann.maxBlasBaseCells ({max_cells}). For a "
+            f"{MAX_BLAS_BASE_CELLS} ({max_cells}). For a "
             f"large base use cosine_topk_scan (distributed base, broadcast "
             f"queries) or ivf_topk/lsh_topk (bounded approximate scans), "
             f"or raise the conf if the driver really has the memory."

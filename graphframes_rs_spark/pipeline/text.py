@@ -424,7 +424,7 @@ def tfidf_topk_terms(
     style aggregate without the count), so the two exchanges are NOT
     ReusedExchange-eligible and the corpus tokenize+explode pass executed
     once per consumer (plan-verified r15 — the r14 reuse-eligibility
-    claim was wrong; see plans/r15/tfidf_topk_before.txt). The pin makes
+    claim was wrong). The pin makes
     the generation pass run exactly once; dfreq stays a combine-enabled
     groupBy (skew-safe for hot tokens — a token-partitioned window would
     buffer a corpus-scale partition per hot token at 100 TB). False =

@@ -1,6 +1,6 @@
 """Canonical graph derivations from the driver's synthetic tables.
 
-Two graphs shared by ``__spark_entry__`` and ``bench.py``:
+Two graphs shared by ``__spark_entry__`` and ``perfbench``:
 
 * **lineitem bipartite** — orders → suppliers (supplier ids offset by
   10_000_000 to keep the id spaces disjoint). Large, dense, scales with sf;

@@ -33,7 +33,7 @@ def spark(tmp_path_factory):
         # tiny, so AQE's per-exchange query-stage materialization is pure
         # scheduling overhead — measured 131.9s -> 98.8s on the iterative
         # modules (test_mis + test_scc, local[8]) with identical results.
-        # Production/bench sessions keep AQE on (bench.py, scale gates);
+        # Production/benchmark sessions keep AQE on (perfbench, scale gates);
         # plan-shape tests already handle both modes. Override with
         # SPARK_GRAFT_TEST_AQE=true to run the suite under AQE.
         .config(

@@ -1,6 +1,11 @@
-"""Doc-drift guard: every ``spark.graphframes.*`` key the package reads is
-documented in the README ``## Configuration`` table, and the table lists
-no key the package does not read. Spark-free (parses source and markdown)."""
+"""Doc-drift guards, Spark-free (they parse source and markdown):
+
+* every ``spark.graphframes.*`` key the package reads is documented in the
+  README ``## Configuration`` table, and the table lists no key the package
+  does not read;
+* every script or captured plan file that the docs, the package or the
+  tests cite by path still exists.
+"""
 
 import ast
 import re
@@ -8,6 +13,8 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 KEY = re.compile(r"spark\.graphframes\.[A-Za-z0-9_.]+")
+# a root-level benchmark script, a tools/ script or a captured plans/r<N>/ file
+CITATION = re.compile(r"(?<![\w.-])(?:bench\.py|tools/[\w.-]+\.py|plans/r\d+/[\w.-]+)")
 
 
 def _source_keys():
@@ -37,3 +44,16 @@ def test_readme_config_table_matches_source_keys():
     assert source, "no spark.graphframes.* keys found in the package"
     assert source - readme == set(), "keys read by the package but missing from README"
     assert readme - source == set(), "README keys the package never reads"
+
+
+def test_cited_paths_exist():
+    files = [ROOT / "README.md", ROOT / ".claude" / "skills" / "verify" / "SKILL.md"]
+    for top in ("graphframes_rs_spark", "tests"):
+        files += sorted((ROOT / top).rglob("*.py"))
+    dangling = [
+        f"{path.relative_to(ROOT)}: {cited}"
+        for path in files
+        for cited in {m.rstrip(".") for m in CITATION.findall(path.read_text())}
+        if not (ROOT / cited).exists()
+    ]
+    assert dangling == [], "citations of paths that do not exist"

@@ -1,6 +1,7 @@
 """Borůvka minimum spanning forest + landmark closeness/harmonic."""
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -194,5 +195,17 @@ def test_mst_local_msf_finisher_agrees_with_distributed(spark, ckpt_dir):
     local = run_with("1000000")  # finisher from round 1
     dist = run_with("0")         # pure distributed rounds
     assert local == dist
+    for key, bad in (
+        ("spark.graphframes.mst.localFinishEdges", "-1"),
+        ("spark.graphframes.mst.localFinishComponents", "1e3"),
+    ):
+        # a bad value names its key and fails before the first checkpoint
+        spark.conf.set(key, bad)
+        try:
+            with pytest.raises(ValueError, match=key):
+                _mst_edges(g, ckpt_dir + "_bad")
+        finally:
+            spark.conf.unset(key)
+        assert not os.path.exists(ckpt_dir + "_bad")
     # forest invariant: |edges| = |touched vertices| - |components| (2 here)
     assert len(local) == len({u for u, v, w in local} | {v for u, v, w in local}) - 2

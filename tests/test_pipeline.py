@@ -236,6 +236,12 @@ def test_cosine_topk_blas_guards_oversized_base(spark, embeddings):
             similarity.cosine_topk_blas(embeddings, queries, k=3)
     finally:
         spark.conf.unset("spark.graphframes.ann.maxBlasBaseCells")
+    spark.conf.set("spark.graphframes.ann.maxBlasBaseCells", "64M")
+    try:
+        with pytest.raises(ValueError, match="spark.graphframes.ann.maxBlasBaseCells"):
+            similarity.cosine_topk_blas(embeddings, queries, k=3)
+    finally:
+        spark.conf.unset("spark.graphframes.ann.maxBlasBaseCells")
     assert similarity.cosine_topk_blas(embeddings, queries, k=3).count() > 0
 
 

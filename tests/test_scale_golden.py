@@ -32,9 +32,9 @@ from pyspark.sql import functions as F
 
 from graphframes_rs_spark.graphframe import GraphFrame
 
-# the bench's 18m tier recipe, verbatim (bench.py _prepare_scale_graph):
-# src/dst are xxhash64-derived, so the graph is bit-identical to the one
-# every BENCH_r*.json row measures — the gate certifies THAT graph
+# the 18m scale tier recipe: src/dst are xxhash64-derived, so the graph
+# is bit-identical to the one every BENCH_r*.json row measures — the gate
+# certifies THAT graph
 VERTICES = 6_000_000
 EDGES = 18_000_000
 

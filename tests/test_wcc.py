@@ -51,9 +51,16 @@ def test_seed_independence_of_labels(spark, ckpt_dir):
 def test_distributed_contraction_path(spark, ckpt_dir):
     """Force the distributed contraction rounds (local finisher disabled by
     a zero threshold) and check they produce the same components as the
-    default local-finish path — a long chain needs several rounds."""
+    default local-finish path — a long chain needs several rounds. A
+    negative or non-integer key raises ValueError naming the key before the
+    prep checkpoint is written, so nothing is left behind."""
+    import os
+
+    import pytest
+
     from graphframes_rs_spark.operators.connected_components import (
         LOCAL_FINISH_EDGES,
+        REP_DOUBLING,
     )
 
     vertices = list(range(0, 40))
@@ -66,6 +73,14 @@ def test_distributed_contraction_path(spark, ckpt_dir):
         spark.conf.unset(LOCAL_FINISH_EDGES)
     assert out == expected
     assert _wcc(spark, ckpt_dir + "l", vertices, edges) == expected
+    for key, bad in ((LOCAL_FINISH_EDGES, "-1"), (REP_DOUBLING, "two")):
+        spark.conf.set(key, bad)
+        try:
+            with pytest.raises(ValueError, match=key):
+                _wcc(spark, ckpt_dir + "bad", vertices, edges)
+        finally:
+            spark.conf.unset(key)
+        assert not os.path.exists(ckpt_dir + "bad")
 
 
 def test_update_components_merges_and_singletons(spark, ckpt_dir):
